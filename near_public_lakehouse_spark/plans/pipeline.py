@@ -1,13 +1,18 @@
 """The full NEAR-shaped medallion DAG wired onto the runner — the OSS
 equivalent of the reference's DLT pipeline graph (SURVEY §3.1).
 
-Bronze sources: `raw_blocks` / `raw_shards` (file-glob JSON, S1).
+Bronze sources: `raw_blocks` / `raw_shards` (file-glob JSON, S1). A batch
+refresh parses the JSON once into bronze parquet under `out_dir/_bronze/`
+(the reference's `blocks` / `chunks` tables) and feeds the silver nodes
+from it; an incremental refresh streams the JSON files directly.
 Silver: every table from SURVEY §1.4 that the fixture surface exercises.
 SCD1: accounts / access_keys / function-call methods / outcome events via
 operators.scd.apply_changes.
 """
 
 from __future__ import annotations
+
+import os
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -296,12 +301,16 @@ def build_pipeline(
 
 
 def run_batch(spark: SparkSession, raw_dir: str, out_dir: str) -> Pipeline:
-    """Full batch refresh from raw JSON files."""
+    """Full batch refresh from raw JSON files. The JSON is parsed once into
+    bronze parquet under `out_dir/_bronze/`, and every node that reads a
+    raw source reads that parquet."""
     p = build_pipeline(spark, out_dir)
-    sources = {
-        "raw_blocks": read_blocks(spark, raw_dir),
-        "raw_shards": read_shards(spark, raw_dir),
-    }
+    sources = {}
+    for name, read in (("raw_blocks", read_blocks), ("raw_shards", read_shards)):
+        path = os.path.join(out_dir, "_bronze", name)
+        raw = read(spark, raw_dir)
+        raw.write.mode("overwrite").parquet(path)
+        sources[name] = spark.read.schema(raw.schema).parquet(path)
     p.run_batch(sources)
     return p
 

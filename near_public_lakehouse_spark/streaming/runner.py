@@ -2,10 +2,15 @@
 dependency order, batch or incrementally (SURVEY §4: the only "engine"
 pieces the rebuild needs, item (a)).
 
-Each node declares (name, deps, build_fn); the runner topologically sorts
-and materializes each table to parquet partitioned by `block_date`. In
-incremental mode the fact-side bronze source is a Structured Streaming
-file/parquet stream with `trigger(availableNow=True)` and a checkpoint —
+Each node declares (name, deps, build_fn); the runner materializes each
+table to parquet partitioned by `block_date`. In batch mode it schedules
+by frontier, as DLT schedules from table references: every node whose
+deps are built runs on a thread pool as wide as the session's
+`defaultParallelism`, its Spark jobs tagged with the node's name as job
+group; the first failure stops new nodes from starting and propagates
+once the running ones finish. In incremental mode the fact-side bronze
+source is a Structured Streaming file/parquet stream with
+`trigger(availableNow=True)` and a checkpoint —
 the same resume contract as DLT's streaming live tables (T2/T3) — while
 dimension-side inputs are re-read per micro-batch (stream-static join; the
 blocks side of J1 is complete by the time a shard batch lands, because the
@@ -22,6 +27,7 @@ from __future__ import annotations
 
 import os
 from collections.abc import Callable
+from concurrent.futures import FIRST_COMPLETED, Future, ThreadPoolExecutor, wait
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
@@ -125,7 +131,16 @@ class Pipeline:
         return self.spark.read.parquet(self.path(name))
 
     def run_batch(self, sources: dict[str, DataFrame]) -> None:
-        """Full refresh: build every table in topo order, parquet it.
+        """Full refresh: build every table and parquet it, scheduling by
+        frontier. Every node whose deps are all built runs at once on a
+        thread pool as wide as the session's `defaultParallelism`, so
+        independent nodes overlap their driver-side planning and their
+        Spark jobs; each node's jobs carry its name as their job group.
+
+        Deps are checked before any node runs: a dep that is neither a
+        table nor a supplied source raises `ValueError` naming it. When a
+        node raises, no further node starts (its dependents never do),
+        nodes already running finish, and the first exception propagates.
 
         Stateful (apply-fn) nodes are refreshed into a FRESH path and
         swapped in: applying straight onto a previously populated target
@@ -138,33 +153,62 @@ class Pipeline:
         neither copy existed and the next run deleted the parked copy
         before the rebuild succeeded).
         """
+        missing = sorted(
+            {d for t in self.tables.values() for d in t.deps} - self.tables.keys() - sources.keys()
+        )
+        if missing:
+            raise ValueError(f"deps that are neither a table nor a source: {missing}")
+        waiting = self._topo_order()
         built: dict[str, DataFrame] = dict(sources)
-        for t in self._topo_order():
-            inputs = {d: built[d] for d in t.deps}
-            df = t.build(self.spark, inputs)
-            self._save_schema(t.name, df)
-            if t.apply is not None:
-                import shutil
+        running: dict[Future, str] = {}
+        error: BaseException | None = None
+        with ThreadPoolExecutor(self.spark.sparkContext.defaultParallelism) as pool:
+            while True:
+                if error is None:
+                    for t in [t for t in waiting if all(d in built for d in t.deps)]:
+                        waiting.remove(t)
+                        inputs = {d: built[d] for d in t.deps}
+                        running[pool.submit(self._refresh_node, t, inputs)] = t.name
+                if not running:
+                    break  # every node is built, or a failure left the rest unstarted
+                done, _ = wait(running, return_when=FIRST_COMPLETED)
+                for f in done:
+                    name, exc = running.pop(f), f.exception()
+                    if exc is None:
+                        built[name] = f.result()
+                    else:
+                        error = error or exc
+        if error is not None:
+            raise error
 
-                path = self.path(t.name)
-                tmp, parked = path + ".__refresh__", path + ".__old__"
-                # recovery: a parked dir with no live table is the only
-                # copy (crash between park and install) — restore first
-                if os.path.isdir(parked) and not os.path.isdir(path):
-                    os.rename(parked, path)
-                shutil.rmtree(tmp, ignore_errors=True)
-                t.apply(self.spark, df, tmp)
-                shutil.rmtree(parked, ignore_errors=True)
-                if os.path.isdir(path):
-                    os.rename(path, parked)
-                os.rename(tmp, path)
-                shutil.rmtree(parked, ignore_errors=True)
-            else:
-                w = df.write.mode("overwrite")
-                if t.partition_by and t.partition_by in df.columns:
-                    w = w.partitionBy(t.partition_by)
-                w.parquet(self.path(t.name))
-            built[t.name] = self.read(t.name)
+    def _refresh_node(self, t: TableDef, inputs: dict[str, DataFrame]) -> DataFrame:
+        """One full-refresh node: build, sidecar, then the stateful swap
+        or a parquet overwrite; returns the table read back."""
+        self.spark.sparkContext.setJobGroup(t.name, t.name)
+        df = t.build(self.spark, inputs)
+        self._save_schema(t.name, df)
+        if t.apply is not None:
+            import shutil
+
+            path = self.path(t.name)
+            tmp, parked = path + ".__refresh__", path + ".__old__"
+            # recovery: a parked dir with no live table is the only
+            # copy (crash between park and install) — restore first
+            if os.path.isdir(parked) and not os.path.isdir(path):
+                os.rename(parked, path)
+            shutil.rmtree(tmp, ignore_errors=True)
+            t.apply(self.spark, df, tmp)
+            shutil.rmtree(parked, ignore_errors=True)
+            if os.path.isdir(path):
+                os.rename(path, parked)
+            os.rename(tmp, path)
+            shutil.rmtree(parked, ignore_errors=True)
+        else:
+            w = df.write.mode("overwrite")
+            if t.partition_by and t.partition_by in df.columns:
+                w = w.partitionBy(t.partition_by)
+            w.parquet(self.path(t.name))
+        return self.read(t.name)
 
     def run_incremental(
         self,

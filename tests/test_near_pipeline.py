@@ -12,8 +12,10 @@ import shutil
 import pytest
 from pyspark.sql import functions as F
 
-from near_public_lakehouse_spark.plans.pipeline import run_batch, run_incremental
+from near_public_lakehouse_spark.plans.pipeline import build_pipeline, run_batch, run_incremental
 from near_public_lakehouse_spark.sources.fixtures import generate_fixtures
+from near_public_lakehouse_spark.sources.json_stream import read_blocks, read_shards
+from near_public_lakehouse_spark.testing.compare import result_hash
 
 N_BLOCKS = 60
 N_SHARDS = 2
@@ -31,6 +33,30 @@ def raw_dir(tmp_path_factory):
 def pipe(spark, raw_dir, tmp_path_factory):
     out = tmp_path_factory.mktemp("near_out")
     return run_batch(spark, raw_dir, str(out))
+
+
+def test_node_jobs_carry_the_node_name_as_job_group(spark, pipe):
+    tracker = spark.sparkContext.statusTracker()
+    chunks = set(tracker.getJobIdsForGroup("silver_chunks"))
+    blocks = set(tracker.getJobIdsForGroup("silver_blocks"))
+    assert chunks and blocks
+    assert not chunks & blocks
+
+
+def test_bronze_parquet_matches_json_sources(spark, raw_dir, pipe, tmp_path_factory):
+    """Feeding the silver nodes from bronze parquet publishes exactly what
+    feeding them the parsed JSON frames directly does, table for table."""
+    direct = build_pipeline(spark, str(tmp_path_factory.mktemp("near_out_json")))
+    direct.run_batch(
+        {"raw_blocks": read_blocks(spark, raw_dir), "raw_shards": read_shards(spark, raw_dir)}
+    )
+
+    def table_hash(p, name):
+        df = p.read(name).drop("_processed_time")
+        return result_hash(df.columns, df.collect())
+
+    for name in pipe.tables:
+        assert table_hash(pipe, name) == table_hash(direct, name), name
 
 
 def test_silver_blocks(pipe):

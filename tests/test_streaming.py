@@ -145,6 +145,58 @@ def test_run_batch_is_true_full_refresh_for_stateful_nodes(spark, tmp_path):
     assert rows == {1: ("a2", 20)}
 
 
+def test_run_batch_rejects_unknown_deps_before_any_node_runs(spark, tmp_path):
+    from near_public_lakehouse_spark.streaming.runner import Pipeline
+
+    pipe = Pipeline(spark, str(tmp_path))
+
+    @pipe.table("a", deps=["src"], partition_by=None)
+    def _a(s, inputs):
+        return inputs["src"]
+
+    @pipe.table("b", deps=["a", "ghost"], partition_by=None)
+    def _b(s, inputs):
+        return inputs["a"]
+
+    src = spark.createDataFrame([(1,)], "k int")
+    with pytest.raises(ValueError, match="ghost"):
+        pipe.run_batch({"src": src})
+    assert not os.path.exists(pipe.path("a"))
+
+
+def test_run_batch_failure_skips_dependents_and_finishes_siblings(spark, tmp_path):
+    """A failing node's exception propagates; its dependent is never
+    built; a sibling already running when it fails completes."""
+    import threading
+
+    from near_public_lakehouse_spark.streaming.runner import Pipeline
+
+    pipe = Pipeline(spark, str(tmp_path))
+    sibling_started = threading.Event()
+    dependent_built = []
+
+    @pipe.table("boom", deps=["src"], partition_by=None)
+    def _boom(s, inputs):
+        assert sibling_started.wait(60)
+        raise RuntimeError("boom failed")
+
+    @pipe.table("sibling", deps=["src"], partition_by=None)
+    def _sibling(s, inputs):
+        sibling_started.set()
+        return inputs["src"]
+
+    @pipe.table("after_boom", deps=["boom"], partition_by=None)
+    def _after(s, inputs):
+        dependent_built.append(True)
+        return inputs["boom"]
+
+    src = spark.createDataFrame([(i,) for i in range(100)], "k int")
+    with pytest.raises(RuntimeError, match="boom failed"):
+        pipe.run_batch({"src": src})
+    assert dependent_built == []
+    assert sorted(r.k for r in pipe.read("sibling").collect()) == list(range(100))
+
+
 def test_streaming_frequent_ngrams_matches_batch(spark, tmp_path):
     """The keyed-MG stream must converge to the batch truth: with
     capacity high enough to never overflow, the final snapshot per bucket
