@@ -1011,16 +1011,17 @@ def _min_label_cc(edges: DataFrame) -> DataFrame:
     sym = edges_c.select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst")).union(
         edges_c.select(F.col("doc_b").alias("src"), F.col("doc_a").alias("dst"))
     )
-    # Plain checkpoint, not `operators.bucketing.colocate`: while the
-    # (id, lab) state fits a broadcast, each round's join runs broadcast
-    # (bound explicitly below), which measured FASTER than the
-    # co-located SMJ layout (see the colocate docstring for the numbers
-    # and the at-scale regime where co-location wins instead).
+    # Plain checkpoint, not a co-located (hash-partitioned + sorted)
+    # layout: while the (id, lab) state fits a broadcast, each round's
+    # join runs broadcast (bound explicitly below), and the broadcast
+    # join beat the co-located SMJ (measured sf0.1, local[32]: a HITS
+    # half-round at 1.06 s vs 2.17 s).
     sym = sym.localCheckpoint()
     # Narrow the round-loop input to the row-count width (guide §2.2):
     # the checkpoint inherits the verify pipeline's CPU-spreading width
     # (132 partitions at bench scale for a ~12-partition-sized frame).
-    sym = narrowed_ckpt(sym, sym.count())
+    n_sym = sym.count()
+    sym = narrowed_ckpt(sym, n_sym)
     labels = sym.select(F.col("src").alias("id")).distinct().select(
         "id", F.col("id").alias("lab")
     )
@@ -1036,20 +1037,20 @@ def _min_label_cc(edges: DataFrame) -> DataFrame:
     # which is the right plan when the node set itself is cluster-scale.
     from near_public_lakehouse_spark.queries.graph import (
         _merge_layout,
+        _release,
         _state_broadcastable,
     )
 
     bcast = _state_broadcastable(edges.sparkSession, labels.count(), 0)
+    layouts = []
     if not bcast:
         # Merge regime (r16 optimization round — the VERDICT r15
         # structural item): every round's SMJ re-exchanged and re-sorted
         # the static O(edges) sym side. One src-keyed sorted cached
         # layout serves all rounds; only the label frame moves per
-        # round. Unpersisted after the loop — the rounds below execute
-        # EAGERLY (the Observation forces each round), so unlike the
-        # lazy graph rounds nothing references the layout once labels
-        # converge.
-        sym = _merge_layout(sym, "src", sym.count())
+        # round.
+        sym = _merge_layout(sym, "src", n_sym)
+        layouts.append(sym)
     prev_sum: int | None = None
     for i in range(50):
         state = F.broadcast(labels) if bcast else labels
@@ -1077,8 +1078,9 @@ def _min_label_cc(edges: DataFrame) -> DataFrame:
         if lab_sum == prev_sum and i > 0:
             break
         prev_sum = lab_sum
-    if not bcast:
-        sym.unpersist()
+    # the rounds ran EAGERLY (the Observation forces each one), so the
+    # final labels are already materialized and read no layout
+    _release(layouts)
     return labels
 
 
@@ -1146,19 +1148,20 @@ def _star_cc(edges: DataFrame, include_roots: bool = True) -> DataFrame:
     # repartitions stay — they are the groupBy's own exchange), beyond it
     # the aligned-SMJ shape is kept, which is right when the node set is
     # cluster-scale.
-    from near_public_lakehouse_spark.queries.graph import _state_broadcastable
+    from near_public_lakehouse_spark.queries.graph import (
+        APPROX_HEADROOM,
+        _state_broadcastable,
+    )
 
     nn = e.agg(
         F.approx_count_distinct("a").alias("na"),
         F.approx_count_distinct("b").alias("nb"),
     ).first()
-    # 1.1x headroom on the approximate count (r15 ADVICE):
-    # approx_count_distinct's default ~5% rsd can UNDERestimate, and this
-    # estimate binds a hard F.broadcast — inflate it so a mins frame near
-    # the threshold never force-broadcasts past the session limit.
+    # the graph trio's headroom on the approximate count (r15 ADVICE):
+    # this estimate binds a hard F.broadcast too
     bcast = _state_broadcastable(
         edges.sparkSession,
-        int(1.1 * (int(nn["na"] or 0) + int(nn["nb"] or 0))),
+        int(APPROX_HEADROOM * (int(nn["na"] or 0) + int(nn["nb"] or 0))),
         0,
     )
     nodes = None

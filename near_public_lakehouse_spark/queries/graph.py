@@ -1,30 +1,40 @@
-"""Iterative graph analytics over the TPC-H-ish tables: weighted
-PageRank on the customer-supplier interaction graph.
+"""Iterative graph analytics over the TPC-H-ish tables: the graph trio
+of weighted PageRank, BFS hop distances and HITS hubs/authorities on the
+customer-supplier interaction graph.
 
-The near-dup machinery already exercises connected components (two
-engines, `queries/dedup.py`); this adds the other canonical iterative
-graph primitive, with a REAL cross-engine oracle: the DuckDB side
-unrolls the same {PR_ITERS} power iterations as generated CTE text
-(`_pr_iteration_sql`), so every intermediate rank vector — not just an
-invariant — is hash-compared. That makes this one of the few iterative
-algorithms in the registry with a full-value oracle rather than a
-rows-only twin.
+Each query has a REAL cross-engine oracle: the DuckDB side unrolls the
+same rounds as generated CTE text, so every intermediate score vector,
+not just an invariant, is hash-compared. Per-round rounding (PageRank,
+HITS) and integer hops (BFS) keep both engines in lockstep, and the
+outputs pass the driver's 6 dp float canonicalization with margin.
 
-Graph: undirected bipartite customer<->supplier, edge weight = number
-of lineitems the pair transacted (lineitem x orders join). Every
-included node has degree >= 1 by construction, so the walk has no
-dangling mass.
+Graph: `_graph_edges` is the one edge build, shared by all three
+queries: the lineitem x orders join grouped to (cust, supp, w), with w
+the number of lineitems the pair transacted. HITS iterates the
+bipartite list as is. PageRank and BFS walk it undirected
+(`_undirected`: both directions of the pair list, with node identity
+coded as one BIGINT); every included node has degree >= 1, so the walk
+has no dangling mass.
 
-Scale design: one edge-build shuffle (groupBy pair), then {PR_ITERS}
-bounded rounds, each ONE join-aggregate shuffled on the edge source key
-— the standard Pregel/GraphX message-passing shape; rank state is
-O(nodes) and localCheckpointed per round to keep lineage flat. The only
-driver-side read is the node count (one scalar).
+Round shape: one edge-build shuffle, then bounded rounds, each ONE
+join-aggregate between the static O(edges) side and an O(nodes) state
+frame (the Pregel/GraphX message-passing shape), with lineage cut by
+localCheckpoints.
 
-Cross-engine determinism: ranks are rounded to 12 dp after EVERY
-iteration on both engines, so summation-order noise (different
-neighbor-contribution orders) cannot compound across rounds; the output
-then passes the driver's 6 dp float canonicalization with margin.
+Regime pick: while the state frame fits the session broadcast
+threshold, each round binds an explicit broadcast of the state (HITS
+then runs driver-paced); beyond it the state side carries a merge hint.
+`_regimes` makes the pick for BFS and HITS from one bounded aggregate
+(approx distinct count with 1.1x headroom, times the key's bytes);
+PageRank uses the exact node count it needs for the teleport term
+anyway.
+
+Layout lifetime: the edge layouts that `_agg_layout` (broadcast halves)
+and `_merge_layout` (merge-regime rounds) cache are released by
+`_release` before the query returns, in every regime. Where the result
+still plans over a layout (merge and mixed regimes), it is materialized
+first with an eager localCheckpoint; the broadcast regime pays no extra
+job.
 """
 
 from __future__ import annotations
@@ -50,14 +60,14 @@ PR_DP = 12  # per-iteration rounding keeps both engines in lockstep
 # table EVERY round and degrades 2-5x vs a plain shuffled SMJ (SCALE.md
 # 4M-pair table: PR 62 s bcast vs 37 s SMJ; HITS half 28 s vs 6 s).
 # Selection was manual; now each iterative query estimates its state
-# frame's broadcast weight in the SAME driver aggregate that already
-# sizes the graph and pins the per-round join strategy accordingly:
-# broadcastable -> leave the join unhinted (today's AQE-broadcast plan,
-# bench plans byte-identical), else -> hint("merge") on the state side,
-# which JoinSelection honors under AQE re-planning, keeping
-# OptimizeSkewedJoin available (the probe's smj_skewaqe row). Mirrors
-# the dedup hot-group detection pattern (adaptive_lsh.py: one bounded
-# aggregate decides the physical strategy).
+# frame's broadcast weight from one bounded driver aggregate (`_regimes`,
+# or PageRank's exact node count) and pins the per-round join strategy
+# accordingly: broadcastable -> an explicit broadcast of the state side,
+# else -> hint("merge") on the state side, which JoinSelection honors
+# under AQE re-planning, keeping OptimizeSkewedJoin available (the
+# probe's smj_skewaqe row). Mirrors the dedup hot-group detection
+# pattern (adaptive_lsh.py: one bounded aggregate decides the physical
+# strategy).
 
 # Per-entry cost of the state row inside a broadcast HashedRelation:
 # 8-byte score/rank plus key+entry overhead. Fitted against the probe:
@@ -105,13 +115,14 @@ def _decode_node_cols():
     )
 
 
-def _state_name_bytes(nodes: DataFrame, col: str = "node"):
-    """Aggregate expression estimating the state key's payload bytes for
-    the broadcast-regime pick: octet count for strings, 8 bytes/row for
-    the BIGINT-coded form (the probes still feed string-keyed frames)."""
-    if dict(nodes.dtypes)[col] == "string":
-        return F.coalesce(F.sum(F.length(col)), F.lit(0))
-    return F.count(F.lit(1)) * 8
+def _key_bytes(df: DataFrame, col: str):
+    """Aggregate expression for one state key's payload bytes in the
+    regime pick: 8 for the BIGINT-coded keys, the longest octet length
+    for string keys (the skew probes still feed string-keyed frames)."""
+    if dict(df.dtypes)[col] == "string":
+        return F.coalesce(F.max(F.octet_length(col)), F.lit(0))
+    return F.lit(8)
+
 
 _SIZE_RE = re.compile(r"^(-?\d+)\s*([kmgtp]?i?b?)$")
 _SIZE_UNIT = {
@@ -144,6 +155,30 @@ def _state_broadcastable(spark: SparkSession, rows: int, name_bytes: int) -> boo
     return thr > 0 and name_bytes + rows * STATE_ROW_OVERHEAD <= thr
 
 
+# approx_count_distinct's default ~5% rsd can UNDERestimate, and the pick
+# binds a hard broadcast: inflate the estimate so a state frame near the
+# threshold never force-broadcasts past the session limit.
+APPROX_HEADROOM = 1.1
+
+
+def _regimes(edges: DataFrame, *key_cols: str) -> tuple[bool, ...]:
+    """The round-join regime per state frame keyed by each of `key_cols`
+    (True = broadcast), from ONE bounded aggregate over the edge list:
+    approx distinct count x `APPROX_HEADROOM` and the key's bytes.
+    approx_count_distinct is plenty for a regime threshold, and over an
+    already-materialized edge checkpoint it is one cheap job."""
+    s = edges.agg(
+        *[F.approx_count_distinct(c).alias(f"n{i}") for i, c in enumerate(key_cols)],
+        *[_key_bytes(edges, c).alias(f"b{i}") for i, c in enumerate(key_cols)],
+    ).first()
+    spark = edges.sparkSession
+    out = []
+    for i in range(len(key_cols)):
+        n = int(APPROX_HEADROOM * int(s[f"n{i}"] or 0))
+        out.append(_state_broadcastable(spark, n, n * int(s[f"b{i}"])))
+    return tuple(out)
+
+
 def _agg_layout(edges: DataFrame, agg_key: str, n_rows: int) -> DataFrame:
     """Edge layout hash-partitioned by the round-aggregate's GROUP key, at
     the row-count-derived width (dedup.decision_parts), cached so the
@@ -160,7 +195,7 @@ def _agg_layout(edges: DataFrame, agg_key: str, n_rows: int) -> DataFrame:
     cached plan unique per invocation — a fresh bench run re-reads
     parquet and re-pays the one layout shuffle. Only sensible in the
     broadcast regime (an SMJ on the other key would re-shuffle the
-    layout away); merge-regime callers keep the plain checkpoint.
+    layout away); merge-regime callers use `_merge_layout`.
 
     Width: decision_parts FLOORED at the cluster parallelism (r16 — the
     idle-window probe VERDICT r15 asked for): the driver-paced loop
@@ -215,6 +250,74 @@ def _merge_layout(edges: DataFrame, key: str, n_rows: int) -> DataFrame:
     # tests/test_r16_opt.py).
     out.count()
     return out
+
+
+def _release(layouts: list[DataFrame], *live: DataFrame) -> tuple[DataFrame, ...]:
+    """The one release path for cached edge layouts: every layout a query
+    built with `_agg_layout` / `_merge_layout` is unpersisted here before
+    the query returns, so no InMemoryRelation outlives the invocation.
+    `live` are the result frames whose lazy plans still read a layout
+    (the merge and mixed regimes' round chains): each is materialized
+    with an eager localCheckpoint FIRST and returned in its place, so the
+    release cannot force a recompute of the rounds. Callers whose result
+    no longer reads a layout (driver-paced HITS, the eager CC rounds)
+    pass none and pay no extra job."""
+    out = tuple(df.localCheckpoint() for df in live)
+    for lay in layouts:
+        lay.unpersist()
+    return out
+
+
+def _graph_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The trio's one edge build: (cust bigint, supp bigint, w double),
+    one row per transacting customer-supplier pair, w = its lineitem
+    count. The raw BIGINT keys are unambiguous while cust and supp live
+    in separate columns (HITS); the undirected walks recode them into
+    one node column (`_node_code`)."""
+    li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
+    orders = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
+    return (
+        li.join(orders, li.l_orderkey == orders.o_orderkey)
+        .groupBy("o_custkey", "l_suppkey")
+        .agg(F.count(F.lit(1)).cast("double").alias("w"))
+        .select(
+            F.col("o_custkey").cast("bigint").alias("cust"),
+            F.col("l_suppkey").cast("bigint").alias("supp"),
+            "w",
+        )
+    )
+
+
+def _coded_pairs(edges: DataFrame, *extra: str) -> DataFrame:
+    """(a, b, *extra) from `_graph_edges` under the one-column BIGINT
+    node coding (customer a, supplier b)."""
+    return edges.select(
+        _node_code("cust", False).alias("a"), _node_code("supp", True).alias("b"), *extra
+    )
+
+
+def _undirected(pairs: DataFrame, *extra: str) -> DataFrame:
+    """(src, dst, *extra): both directions of an (a, b, *extra) pair
+    list, checkpointed — the PageRank and BFS edge frame.
+
+    The pairs subtree is computed ONCE (r15 optimization round, guide
+    §2.4): the plain union-of-two-projections recomputed the whole pairs
+    plan per branch (TWO full lineitem scans + partial aggregates per
+    build). A lazy checkpoint on pairs makes the reverse branch a narrow
+    block re-read. The UNION shape itself stays (not an explode): its two
+    branches keep the edge checkpoint at >= 2 map partitions at any
+    scale, which is what keeps AQE's skew-split seam armed in the merge
+    regime (a skewed reduce partition can only split across >= 2 map
+    outputs — the dedup decision_parts floor-2 lesson; pinned by
+    tests/test_skew_graph.py::test_smj_regime_aqe_skew_split_engages)."""
+    pairs_c = pairs.localCheckpoint(eager=False)
+    return (
+        pairs_c.select(F.col("a").alias("src"), F.col("b").alias("dst"), *extra)
+        .unionByName(
+            pairs_c.select(F.col("b").alias("src"), F.col("a").alias("dst"), *extra)
+        )
+        .localCheckpoint()
+    )
 
 
 def _pr_iteration_sql() -> str:
@@ -277,18 +380,7 @@ def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     join-aggregate (Pregel message passing as a DataFrame op); the
     DuckDB oracle unrolls the identical iterations, so the full rank
     vector is value-checked, not just an invariant."""
-    li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
-    orders = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    pairs = (
-        li.join(orders, li.l_orderkey == orders.o_orderkey)
-        .groupBy("o_custkey", "l_suppkey")
-        .agg(F.count(F.lit(1)).cast("double").alias("w"))
-        .select(
-            _node_code("o_custkey", False).alias("a"),
-            _node_code("l_suppkey", True).alias("b"),
-            "w",
-        )
-    )
+    pairs = _coded_pairs(_graph_edges(spark, sf_dir), "w")
     return _pr_output(_pr_rounds(*_pr_setup(pairs)))
 
 
@@ -297,31 +389,15 @@ def _pr_setup(pairs: DataFrame) -> tuple[DataFrame, DataFrame, float, bool]:
     pair list — shared by the registry query and the adversarial-skew
     probes so they measure the PRODUCTION frames. The 4th element is the
     auto-picked round-join regime (see `_state_broadcastable`)."""
-    # Compute the pairs subtree ONCE (r15 optimization round, guide §2.4):
-    # the plain union-of-two-projections recomputed the whole pairs plan
-    # per branch — the stage metrics showed TWO full lineitem scans +
-    # partial aggregates building this frame. A lazy checkpoint on pairs
-    # makes the reverse branch a narrow block re-read. The UNION shape
-    # itself stays (not an explode): its two branches keep the edge
-    # checkpoint at >= 2 map partitions at any scale, which is what keeps
-    # AQE's skew-split seam armed in the merge regime (a skewed reduce
-    # partition can only split across >= 2 map outputs — the dedup
-    # decision_parts floor-2 lesson; pinned by
-    # tests/test_skew_graph.py::test_smj_regime_aqe_skew_split_engages).
-    pairs_c = pairs.localCheckpoint(eager=False)
-    edges = (
-        pairs_c.select(F.col("a").alias("src"), F.col("b").alias("dst"), "w")
-        .unionByName(pairs_c.select(F.col("b").alias("src"), F.col("a").alias("dst"), "w"))
-        .localCheckpoint()
-    )
+    edges = _undirected(pairs, "w")
     deg = edges.groupBy("src").agg(F.sum("w").alias("deg"))
     # Fold the degree in ONCE: without this checkpoint every round
     # recomputes the O(E) degree aggregate + join (measured 130 task-s /
     # 196 MB shuffle vs 66 task-s / 100 MB at sf0.1 — a 1.4x wall win).
-    # Plain checkpoint, NOT `colocate`: AQE runtime-broadcasts the
-    # O(nodes) rank side each round, which beats the co-located SMJ while
-    # the state fits a broadcast (see operators/bucketing.colocate for
-    # the measured trade and the regime where co-location wins).
+    # Plain checkpoint, not a co-located (hash-partitioned + sorted)
+    # layout: while the O(nodes) rank side fits a broadcast, the
+    # broadcast join beat the co-located SMJ (measured sf0.1, local[32]:
+    # a HITS half-round at 1.06 s vs 2.17 s).
     # The rounds only ever consume w/deg (r15 optimization round, guide
     # §2.3 narrower types): pre-dividing it into ONE double drops a
     # column from the checkpoint every round re-reads AND the per-edge
@@ -334,16 +410,15 @@ def _pr_setup(pairs: DataFrame) -> tuple[DataFrame, DataFrame, float, bool]:
         .localCheckpoint()
     )
     nodes = contrib.select(F.col("src").alias("node")).distinct().localCheckpoint()
-    # The node count (needed for the teleport term anyway) and the state
-    # frame's broadcast weight come from ONE bounded driver aggregate —
-    # the regime pick costs no extra job (VERDICT r13 task #1).
+    # The EXACT node count (needed for the teleport term anyway) and the
+    # key bytes come from ONE bounded driver aggregate, so PageRank's
+    # regime pick costs no extra job and needs no approx headroom.
     stats = nodes.agg(
-        F.count(F.lit(1)).alias("n"),
-        _state_name_bytes(nodes).alias("name_bytes"),
-    ).collect()[0]
+        F.count(F.lit(1)).alias("n"), _key_bytes(nodes, "node").alias("b")
+    ).first()
     n = float(stats["n"])
     bcast = _state_broadcastable(
-        nodes.sparkSession, int(stats["n"]), int(stats["name_bytes"])
+        nodes.sparkSession, int(stats["n"]), int(stats["n"]) * int(stats["b"])
     )
     rank = nodes.select("node", F.round(F.lit(1.0) / F.lit(n), PR_DP).alias("rank"))
     # Measured and rejected here (r15): both a dst-keyed `_agg_layout`
@@ -415,9 +490,9 @@ def _pr_rounds(
     broadcast_state: bool = True,
     iters: int = PR_ITERS,
 ) -> DataFrame:
-    """The PageRank power-iteration loop, shared by the ad-hoc registry
-    query and the bucketed production path: each round is ONE
-    join-aggregate over `contrib` (src, dst, w, deg), rank state
+    """The PageRank power-iteration loop, shared by the registry query
+    and the skew/merge probes: each round is ONE join-aggregate over
+    `contrib` (src, dst, wd), rank state
     localCheckpointed every {CHECKPOINT_EVERY} rounds to keep lineage
     bounded. `broadcast_state` is `_pr_setup`'s auto-picked regime (4th
     tuple element).
@@ -515,53 +590,34 @@ def graph_bfs_hops(spark: SparkSession, sf_dir: str) -> DataFrame:
     rounding discipline needed. The DuckDB oracle unrolls the identical
     rounds. Frontier state is O(reached nodes); each round is one
     edge-partitioned join-aggregate."""
-    li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
-    orders = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    pairs = (
-        li.join(orders, li.l_orderkey == orders.o_orderkey)
-        .select(
-            _node_code("o_custkey", False).alias("a"),
-            _node_code("l_suppkey", True).alias("b"),
-        )
-        .distinct()
-    )
-    # Compute the distinct-pairs subtree once — same lazy-checkpoint +
-    # union move as `_pr_setup` (the plain union recomputed the distinct
-    # per branch; the two union branches keep >= 2 map partitions so
-    # AQE's skew-split seam stays armed in the merge regime).
-    pairs_c = pairs.localCheckpoint(eager=False)
-    edges = (
-        pairs_c.select(F.col("a").alias("src"), F.col("b").alias("dst"))
-        .unionByName(pairs_c.select(F.col("b").alias("src"), F.col("a").alias("dst")))
-        .localCheckpoint()
-    )
+    # `_graph_edges` is one row per pair, so the projection is already the
+    # distinct pair set (the unused w aggregate is pruned from the plan)
+    edges = _undirected(_coded_pairs(_graph_edges(spark, sf_dir)))
     # Width discipline (guide §2.2, dedup.narrowed_ckpt): the 16-byte
-    # edge rows inherit the distinct's shuffle width; every round's
+    # edge rows inherit the pair aggregate's shuffle width; every round's
     # frontier join then re-reads that many blocks. The min-fold union
     # mixes in the unknown-partitioned dist checkpoint, so (unlike
     # HITS/PR) no agg-keyed layout can remove the round exchange — the
     # narrow checkpoint is the available win.
     from near_public_lakehouse_spark.queries.dedup import narrowed_ckpt
 
-    edges = narrowed_ckpt(edges, edges.count())
+    n_edges = edges.count()
+    edges = narrowed_ckpt(edges, n_edges)
     # Regime pick for the frontier join (r15 optimization round — BFS
     # previously had NO pick, so every round was planned as SMJ off the
-    # checkpoint's MAX size estimate and shuffled the full edge set; the
-    # stage metrics showed ~9.6 MB of edge shuffle per round on a frame
-    # the frontier side could broadcast). The frontier is bounded by the
-    # node count; approx_count_distinct over the already-materialized
-    # edge blocks is one cheap bounded aggregate, same pattern as
-    # `_pr_setup`/`_hits_regimes`.
-    n_nodes = int(edges.agg(F.approx_count_distinct("src")).first()[0] or 0)
-    bcast = _state_broadcastable(spark, n_nodes, n_nodes * 8)
-    if not bcast:
-        # merge regime: per-round SMJ — pre-shape the static edge side
-        # once so only the frontier exchanges/sorts per round (r16)
-        edges = _merge_layout(edges, "src", edges.count())
+    # checkpoint's MAX size estimate and shuffled the full edge set). The
+    # frontier is bounded by the node count.
+    (bcast,) = _regimes(edges, "src")
     dist = inline_rows_df(
         spark, [(BFS_SOURCE_CODE, 0)], [("node", "bigint"), ("hops", "bigint")]
     )
-    return _bfs_output(_bfs_rounds(edges, dist, broadcast_state=bcast))
+    if bcast:
+        return _bfs_output(_bfs_rounds(edges, dist))
+    # merge regime: per-round SMJ — pre-shape the static edge side once
+    # so only the frontier exchanges/sorts per round (r16)
+    lay = _merge_layout(edges, "src", n_edges)
+    (dist,) = _release([lay], _bfs_rounds(lay, dist, broadcast_state=False))
+    return _bfs_output(dist)
 
 
 def _bfs_round(
@@ -594,7 +650,7 @@ def _bfs_rounds(
     broadcast_state: bool = True,
 ) -> DataFrame:
     """The min-plus frontier-expansion loop, shared by the registry query
-    and the bucketed path: each round one edge join + min-fold.
+    and the merge probe: each round one edge join + min-fold.
 
     Unlike `_pr_rounds`, the checkpoint stays PER-ROUND (lazily): a BFS
     round references `dist` TWICE (the frontier join and the min-fold
@@ -693,30 +749,17 @@ def link_analysis_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
     norm whose sum-of-squares would reintroduce float noise). The DuckDB
     oracle unrolls the identical rounds. Each half-iteration is one
     edge-partitioned join-aggregate; score state is O(nodes)."""
-    from near_public_lakehouse_spark.functions.numeric import dsum
-
-    li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
-    orders = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
     # cust/supp live in SEPARATE columns throughout the HITS iteration, so
-    # the raw BIGINT keys are already unambiguous node identities — no
-    # string prefix (or even the *2 coding) needed; the 'C'/'S' letters
-    # are attached only in `_hits_output` (guide §2.3, narrower types).
-    edges = (
-        li.join(orders, li.l_orderkey == orders.o_orderkey)
-        .groupBy("o_custkey", "l_suppkey")
-        .agg(F.count(F.lit(1)).cast("double").alias("w"))
-        .select(
-            F.col("o_custkey").cast("bigint").alias("cust"),
-            F.col("l_suppkey").cast("bigint").alias("supp"),
-            "w",
-        )
-        .localCheckpoint()
-    )
-
+    # the raw BIGINT keys are already unambiguous node identities — the
+    # 'C'/'S' letters are attached only in `_hits_output` (guide §2.3,
+    # narrower types).
+    edges = _graph_edges(spark, sf_dir).localCheckpoint()
     auth = edges.select(F.col("supp").alias("node")).distinct().select(
         "node", F.lit(1.0).alias("score")
     )
-    bcast_auth, bcast_hub = _hits_regimes(edges)
+    # the two half-iterations carry DIFFERENT state frames (auth is
+    # O(suppliers), hub is O(customers)), so each gets its own pick
+    bcast_auth, bcast_hub = _regimes(edges, "supp", "cust")
     # Agg-keyed cached layouts for the broadcast-regime halves (see
     # `_agg_layout`): the h-half joins on supp and groups by cust, the
     # a-half the reverse — each gets the layout its GROUP key needs, and
@@ -739,65 +782,39 @@ def link_analysis_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
         if bcast_hub
         else _merge_layout(edges, "cust", n_edges)
     )
-    out = _hits_output(*_hits_rounds(e_h, e_a, auth, bcast_auth, bcast_hub))
+    hub, auth = _hits_rounds(e_h, e_a, auth, bcast_auth, bcast_hub)
     if bcast_auth and bcast_hub:
-        # Driver-paced loop: every layout read happened inside the
-        # per-half collects above, and the returned frames are literal
-        # state — the cached layouts have no remaining consumer, so drop
-        # them now instead of leaking two InMemoryRelations per
-        # invocation into the session (VERDICT r15 item 3). Mixed/merge
-        # regimes return plans that still read the layouts and keep them.
-        for lay in (e_h, e_a):
-            lay.unpersist()
-    return out
-
-
-def _hits_regimes(edges: DataFrame) -> tuple[bool, bool]:
-    """(bcast_auth, bcast_hub) from ONE bounded aggregate over the
-    bipartite edge list: the two half-iterations carry DIFFERENT state
-    frames (auth is O(suppliers), hub is O(customers)), so each gets its
-    own broadcast-vs-merge pick. approx_count_distinct is plenty for a
-    regime threshold; max(length) upper-bounds the name bytes."""
-    types = dict(edges.dtypes)
-    len_of = lambda c: (  # noqa: E731 — per-column byte estimate
-        F.coalesce(F.max(F.length(c)), F.lit(0)) if types[c] == "string" else F.lit(8)
-    )
-    s = edges.agg(
-        F.approx_count_distinct("cust").alias("nc"),
-        F.approx_count_distinct("supp").alias("ns"),
-        len_of("cust").alias("lc"),
-        len_of("supp").alias("ls"),
-    ).collect()[0]
-    spark = edges.sparkSession
-    return (
-        _state_broadcastable(spark, int(s["ns"]), int(s["ns"]) * int(s["ls"])),
-        _state_broadcastable(spark, int(s["nc"]), int(s["nc"]) * int(s["lc"])),
-    )
+        # driver-paced: every layout read happened inside the per-half
+        # collects, and the returned states are literal frames
+        _release([e_h, e_a])
+    else:
+        hub, auth = _release([e_h, e_a], hub, auth)
+    return _hits_output(hub, auth)
 
 
 def _hits_rounds(
-    edges_by_supp: DataFrame,
-    edges_by_cust: DataFrame,
+    edges_h: DataFrame,
+    edges_a: DataFrame,
     auth: DataFrame,
     bcast_auth: bool = True,
     bcast_hub: bool = True,
     iters: int = HITS_ITERS,
 ) -> tuple[DataFrame, DataFrame]:
-    """The alternating hub/authority half-iterations, shared by the
-    registry query (one edge frame both ways) and the bucketed path
-    (one layout per join side — the half-iterations join on DIFFERENT
-    keys, so each needs its own co-located layout). The two bcast_*
-    flags are `_hits_regimes`' auto-picked per-half join strategies.
+    """The alternating hub/authority half-iterations. `edges_h` feeds the
+    hub half (joins on supp, groups by cust) and `edges_a` the authority
+    half; the registry query passes one layout per half, tests may pass
+    one edge frame both ways. The two bcast_* flags are the per-half
+    `_regimes` picks.
 
     When BOTH states are measured broadcastable the loop runs
     driver-paced (`_hits_rounds_driver`) — the k-means centroid shape;
     any merge-regime half keeps the distributed chain below."""
     if bcast_auth and bcast_hub:
-        return _hits_rounds_driver(edges_by_supp, edges_by_cust, auth, iters)
+        return _hits_rounds_driver(edges_h, edges_a, auth, iters)
     hub = None
     for _ in range(iters):
-        hub = _hits_half(edges_by_supp, auth, "supp", "cust", bcast_auth)
-        auth = _hits_half(edges_by_cust, hub, "cust", "supp", bcast_hub)
+        hub = _hits_half(edges_h, auth, "supp", "cust", bcast_auth)
+        auth = _hits_half(edges_a, hub, "cust", "supp", bcast_hub)
     return hub, auth
 
 
@@ -845,8 +862,8 @@ def _hits_state_df(spark: SparkSession, rows: list[tuple]) -> DataFrame:
 
 
 def _hits_rounds_driver(
-    edges_by_supp: DataFrame,
-    edges_by_cust: DataFrame,
+    edges_h: DataFrame,
+    edges_a: DataFrame,
     auth: DataFrame,
     iters: int = HITS_ITERS,
 ) -> tuple[DataFrame, DataFrame]:
@@ -869,10 +886,10 @@ def _hits_rounds_driver(
     hub = None
     for _ in range(iters):
         hub = _hits_state_df(
-            spark, _hits_state_rows(edges_by_supp, auth, "supp", "cust")
+            spark, _hits_state_rows(edges_h, auth, "supp", "cust")
         )
         auth = _hits_state_df(
-            spark, _hits_state_rows(edges_by_cust, hub, "cust", "supp")
+            spark, _hits_state_rows(edges_a, hub, "cust", "supp")
         )
     return hub, auth
 
@@ -888,9 +905,7 @@ def _hits_half(
     dsum is an algebraic decimal sum, so a hot `out_key`'s contributions
     collapse map-side; the score-side join skew story is `_pr_round`'s
     (broadcast under AQE while the state fits, merge-hinted SMJ beyond —
-    the `_hits_regimes` auto-pick)."""
-    from near_public_lakehouse_spark.functions.numeric import dsum
-
+    the `_regimes` auto-pick)."""
     # LAZY checkpoint (r15 optimization round, guide §2.4/§5): `raw`
     # feeds BOTH the max-normalizer's broadcast aggregate and the
     # normalize projection — unmaterialized, every half-iteration ran
@@ -977,115 +992,3 @@ def _hits_output(hub: DataFrame, auth: DataFrame) -> DataFrame:
         )
 
     return half(hub, "C").unionByName(half(auth, "S")).orderBy("node_type", "node_id")
-
-
-# ---------------------------------------------------------------------------
-# bucketed production path (VERDICT r8 task #4): the one-time edge shuffle
-# is paid at WRITE time; every iteration's big-side join then reads a
-# co-located bucketed scan with NO Exchange. Only the O(nodes) rank/score
-# state and the post-aggregate partials move per round — at 100 TB the
-# edge table (the 100x bigger side) never reshuffles again. Kept OUT of
-# the registry queries themselves: a driver correctness run must stay a
-# read-only one-shot (and a one-shot can't amortize a bucket write);
-# production iterative jobs call bucket_graph_edges once, then the
-# *_from_bucketed variants every run. Parity with the registry queries
-# and the zero-Exchange plan are pinned in tests/test_plan_shapes.py.
-
-GRAPH_BUCKETS = 32
-
-
-def bucket_graph_edges(
-    spark: SparkSession, sf_dir: str, prefix: str = "graph_bkt", n_buckets: int = GRAPH_BUCKETS
-) -> dict[str, str]:
-    """One-time bucketed layouts for the graph family:
-
-    - {prefix}_by_src  (src, dst, w, deg): the undirected weighted edge
-      list with out-degree folded in, bucketed+sorted by src — serves
-      PageRank (contrib join) and BFS (frontier expansion; the (src,dst)
-      set of the weighted list IS the distinct pair set).
-    - {prefix}_bi_by_supp / {prefix}_bi_by_cust  (cust, supp, w): the
-      bipartite list in both layouts — HITS half-iterations join on
-      supp then cust, so co-location needs one layout per key (the
-      DataFrame analog of GraphX's edge replication).
-    """
-    from near_public_lakehouse_spark.operators.bucketing import write_bucketed
-
-    li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
-    orders = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    bi = (
-        li.join(orders, li.l_orderkey == orders.o_orderkey)
-        .groupBy("o_custkey", "l_suppkey")
-        .agg(F.count(F.lit(1)).cast("double").alias("w"))
-        .select(
-            F.col("o_custkey").cast("bigint").alias("cust"),
-            F.col("l_suppkey").cast("bigint").alias("supp"),
-            "w",
-        )
-    )
-    # the undirected union mixes the two partitions in ONE column, so it
-    # uses the *2(+1) BIGINT coding (same as the registry queries)
-    pairs = bi.select(
-        (F.col("cust") * 2).alias("a"), (F.col("supp") * 2 + 1).alias("b"), "w"
-    )
-    edges = pairs.select(F.col("a").alias("src"), F.col("b").alias("dst"), "w").unionByName(
-        pairs.select(F.col("b").alias("src"), F.col("a").alias("dst"), "w")
-    )
-    deg = edges.groupBy("src").agg(F.sum("w").alias("deg"))
-    tables = {
-        "by_src": f"{prefix}_by_src",
-        "bi_by_supp": f"{prefix}_bi_by_supp",
-        "bi_by_cust": f"{prefix}_bi_by_cust",
-    }
-    write_bucketed(edges.join(deg, "src"), tables["by_src"], ["src"], n_buckets)
-    write_bucketed(bi, tables["bi_by_supp"], ["supp"], n_buckets)
-    write_bucketed(bi, tables["bi_by_cust"], ["cust"], n_buckets)
-    return tables
-
-
-def pagerank_from_bucketed(spark: SparkSession, by_src_table: str) -> DataFrame:
-    """`graph_pagerank` over the pre-bucketed edge layout: identical
-    iteration frames (`_pr_rounds`), but every round's edge-side join and
-    the node/degree derivations read co-located buckets with no Exchange."""
-    # same wd = w/deg projection as `_pr_setup` (a projection preserves
-    # the bucketed layout's co-location — no exchange appears)
-    contrib = spark.table(by_src_table).select(
-        "src", "dst", (F.col("w") / F.col("deg")).alias("wd")
-    )
-    nodes = contrib.select(F.col("src").alias("node")).distinct().localCheckpoint()
-    stats = nodes.agg(
-        F.count(F.lit(1)).alias("n"),
-        _state_name_bytes(nodes).alias("name_bytes"),
-    ).collect()[0]
-    n = float(stats["n"])
-    bcast = _state_broadcastable(spark, int(stats["n"]), int(stats["name_bytes"]))
-    rank = nodes.select("node", F.round(F.lit(1.0) / F.lit(n), PR_DP).alias("rank"))
-    return _pr_output(_pr_rounds(contrib, rank, n, bcast))
-
-
-def bfs_from_bucketed(spark: SparkSession, by_src_table: str) -> DataFrame:
-    """`graph_bfs_hops` over the pre-bucketed edge layout — same
-    `_bfs_rounds` frames, exchange-free edge side per round."""
-    edges = spark.table(by_src_table).select("src", "dst")
-    # same measured regime pick as the registry query: broadcast binds
-    # only when the O(nodes) frontier fits the session threshold; beyond
-    # it the rounds stay joins over the co-located bucketed scan.
-    n_nodes = int(edges.agg(F.approx_count_distinct("src")).first()[0] or 0)
-    bcast = _state_broadcastable(spark, n_nodes, n_nodes * 8)
-    dist = inline_rows_df(
-        spark, [(BFS_SOURCE_CODE, 0)], [("node", "bigint"), ("hops", "bigint")]
-    )
-    return _bfs_output(_bfs_rounds(edges, dist, broadcast_state=bcast))
-
-
-def hits_from_bucketed(
-    spark: SparkSession, bi_by_supp_table: str, bi_by_cust_table: str
-) -> DataFrame:
-    """`link_analysis_hits` over the two pre-bucketed bipartite layouts —
-    same `_hits_rounds` frames, each half-iteration's edge side co-located
-    with its join key."""
-    e_supp = spark.table(bi_by_supp_table)
-    e_cust = spark.table(bi_by_cust_table)
-    auth = e_supp.select(F.col("supp").alias("node")).distinct().select(
-        "node", F.lit(1.0).alias("score")
-    )
-    return _hits_output(*_hits_rounds(e_supp, e_cust, auth, *_hits_regimes(e_supp)))

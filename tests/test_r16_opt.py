@@ -6,12 +6,14 @@
 2. `_shift_slots` (the union+groupBy prefix attach that replaced the
    per-round shifted LEFT joins) equals the join formulation row for
    row, fills included.
-3. The HITS agg layouts are unpersisted after a driver-paced run
-   (VERDICT r15 item 3: two InMemoryRelations leaked per invocation).
+3. Every graph query releases its cached edge layouts before it
+   returns, in the broadcast and the merge regime (VERDICT r15 item 3:
+   two InMemoryRelations leaked per HITS invocation).
 """
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 SF_DIR = "/root/testdata/sf0.001"
@@ -50,19 +52,36 @@ def test_hits_driver_loop_matches_distributed(spark):
     assert max(s for _, s in driver[1]) == 1.0
 
 
-def test_hits_registry_query_unpersists_layouts(spark):
+@pytest.mark.parametrize("threshold", [None, "-1"], ids=["default", "no_broadcast"])
+@pytest.mark.parametrize(
+    "name", ["graph_pagerank", "graph_bfs_hops", "link_analysis_hits"]
+)
+def test_hits_registry_query_unpersists_layouts(spark, name, threshold):
+    """Every edge layout a graph query caches is released before the
+    query returns, in the broadcast regime (default threshold) and in the
+    merge regime (threshold -1): after one collect the session's cache
+    manager is empty again."""
     from near_public_lakehouse_spark.queries import all_queries
 
     jsc = spark.sparkContext._jsc.sc()
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    spark.catalog.clearCache()
     before = jsc.getPersistentRDDs().size()
-    df = all_queries()["link_analysis_hits"].fn(spark, SF_DIR)
-    assert df.count() > 0
-    # driver-paced run: both agg layouts released before fn() returned.
-    # The one allowed residue is the query's own edges localCheckpoint
-    # (localCheckpoint registers in persistentRDDs until the
-    # ContextCleaner collects it); pre-fix this grew by 3 — the
-    # checkpoint plus TWO leaked layout InMemoryRelations.
-    assert jsc.getPersistentRDDs().size() <= before + 1
+    if threshold is not None:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", threshold)
+    try:
+        assert len(all_queries()[name].fn(spark, SF_DIR).collect()) > 0
+    finally:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
+    assert cache.isEmpty(), name
+    if name == "link_analysis_hits" and threshold is None:
+        # driver-paced run: both agg layouts released before fn() returned.
+        # The one allowed residue is the query's own edges localCheckpoint
+        # (localCheckpoint registers in persistentRDDs until the
+        # ContextCleaner collects it); pre-fix this grew by 3 — the
+        # checkpoint plus TWO leaked layout InMemoryRelations.
+        assert jsc.getPersistentRDDs().size() <= before + 1
 
 
 def test_graph_queries_regime_invariant_under_merge_layout(spark):

@@ -258,8 +258,9 @@ def test_auto_pick_responds_to_session_threshold(spark):
     """The regime the production setup picks follows the session's
     broadcast threshold: default confs -> broadcast (today's bench
     plans), tiny threshold (emulating nodes~edges at real scale) ->
-    merge. Both PageRank's setup and HITS' per-half pick."""
-    from near_public_lakehouse_spark.queries.graph import _hits_regimes
+    merge. Both PageRank's setup and the shared per-state `_regimes`
+    pick (HITS' two halves, BFS' frontier)."""
+    from near_public_lakehouse_spark.queries.graph import _regimes
 
     pairs = skewed_graph(spark, N_PAIRS).localCheckpoint()
     bi = pairs.select(
@@ -268,13 +269,42 @@ def test_auto_pick_responds_to_session_threshold(spark):
 
     *_, bc = _pr_setup(pairs)
     assert bc is True
-    assert _hits_regimes(bi) == (True, True)
+    assert _regimes(bi, "supp", "cust") == (True, True)
 
     prev = _with_confs(spark, {"spark.sql.autoBroadcastJoinThreshold": "1KB"})
     try:
         *_, bc_small = _pr_setup(pairs)
         assert bc_small is False
-        assert _hits_regimes(bi) == (False, False)
+        assert _regimes(bi, "supp", "cust") == (False, False)
+    finally:
+        _with_confs(spark, prev)
+
+
+def test_regime_estimate_applies_approx_headroom(spark):
+    """The approximate distinct count binds a hard broadcast, so the
+    shared estimator inflates it by APPROX_HEADROOM: with the threshold
+    set between the raw estimate and the inflated one, the pick is merge,
+    where a pick on the raw approx count (the old BFS and HITS picks)
+    would still broadcast."""
+    from near_public_lakehouse_spark.queries.graph import (
+        APPROX_HEADROOM,
+        STATE_ROW_OVERHEAD,
+        _regimes,
+    )
+
+    n = 1000
+    edges = spark.range(n).select(
+        F.col("id").alias("src"), ((F.col("id") + 1) % n).alias("dst")
+    ).localCheckpoint()
+    approx = edges.agg(F.approx_count_distinct("src")).first()[0]
+    raw_bytes = approx * (8 + STATE_ROW_OVERHEAD)
+    inflated = int(APPROX_HEADROOM * approx) * (8 + STATE_ROW_OVERHEAD)
+    thr = (raw_bytes + inflated) // 2
+    assert raw_bytes <= thr < inflated
+    prev = _with_confs(spark, {"spark.sql.autoBroadcastJoinThreshold": str(thr)})
+    try:
+        assert _state_broadcastable(spark, approx, approx * 8)  # raw pick
+        assert _regimes(edges, "src") == (False,)
     finally:
         _with_confs(spark, prev)
 

@@ -3,8 +3,10 @@
 always broadcast, so the per-round SMJ cost that `_merge_layout` removes
 is only measurable on a synthetic graph whose O(nodes) state exceeds the
 broadcast threshold. This builds a deterministic N-pair pseudo-random
-graph (~N distinct nodes -> state ≫ 10 MB for N >= 2M), runs the REAL
-iteration frames (`_pr_setup`/`_pr_rounds`, `_bfs_rounds`,
+graph (~N distinct nodes -> state ≫ 10 MB for N >= 2M; the session's
+broadcast threshold is -1, so every regime pick lands in MERGE at any
+N), runs the REAL iteration frames (`_pr_setup`/`_pr_rounds`; BFS
+through `_undirected`/`_regimes`/`_bfs_rounds`/`_release`;
 `dedup._min_label_cc`) with the layout ON (HEAD) and OFF (monkeypatched
 identity), and prints walls + stage shuffle evidence.
 
@@ -49,6 +51,7 @@ def main() -> None:
         extra_conf={
             "spark.ui.enabled": "true",
             "spark.ui.showConsoleProgress": "false",
+            "spark.sql.autoBroadcastJoinThreshold": "-1",
         },
     )
     spark.sparkContext.setLogLevel("ERROR")
@@ -57,8 +60,8 @@ def main() -> None:
 
     N = args.pairs
     # deterministic pseudo-random bipartite-ish pair list; ~N distinct
-    # nodes total so the (id, value) state is far past the broadcast
-    # threshold -> every regime pick lands in MERGE
+    # nodes total so the (id, value) state is far past the default
+    # broadcast threshold at N >= 2M
     pairs = spark.range(N).select(
         F.col("id").alias("a"),
         (((F.col("id") * 2654435761) % N) + N).alias("b"),
@@ -83,20 +86,18 @@ def main() -> None:
             contrib.unpersist()
 
     def bfs_run():
-        pc = pairs.localCheckpoint(eager=False)
-        edges = (
-            pc.select(F.col("a").alias("src"), F.col("b").alias("dst"))
-            .unionByName(pc.select(F.col("b").alias("src"), F.col("a").alias("dst")))
-            .localCheckpoint()
-        )
-        edges2 = G._merge_layout(edges, "src", N * 2)
+        # the production merge-regime path of `graph_bfs_hops`
+        edges = G._undirected(pairs.select("a", "b"))
+        (bcast,) = G._regimes(edges, "src")
+        assert not bcast, "probe graph unexpectedly broadcastable"
+        lay = G._merge_layout(edges, "src", N * 2)
         dist = G.inline_rows_df(
             spark, [(0, 0)], [("node", "bigint"), ("hops", "bigint")]
         )
-        G._bfs_rounds(edges2, dist, iters=args.iters, broadcast_state=False).write.format(
-            "noop"
-        ).mode("overwrite").save()
-        edges2.unpersist()
+        (out,) = G._release(
+            [lay], G._bfs_rounds(lay, dist, iters=args.iters, broadcast_state=False)
+        )
+        out.write.format("noop").mode("overwrite").save()
 
     def cc_run():
         # the CC engine takes (doc_a, doc_b); cap rounds via the edge set

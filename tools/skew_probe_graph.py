@@ -22,7 +22,7 @@ sizes in three join regimes:
   unlike dedup's row-quadratic expansion the skew is byte-visible to AQE
   exactly where it hurts, and no salted-join wiring is needed.
 - auto (r14, VERDICT r13 task #1): the production auto-pick —
-  `_pr_setup`/`_hits_regimes` estimate the state frame's broadcast
+  `_pr_setup`/`_regimes` estimate the state frame's broadcast
   weight against the session threshold and either leave the round join
   unhinted (AQE broadcast) or merge-hint the state side. CLAIM: the
   auto row matches the best manual regime at both sizes (each JSON row
@@ -87,9 +87,9 @@ def main() -> None:
 
     from near_public_lakehouse_spark.queries.graph import (
         _hits_half,
-        _hits_regimes,
         _pr_rounds,
         _pr_setup,
+        _regimes,
     )
     from near_public_lakehouse_spark.session import get_spark
     from near_public_lakehouse_spark.testing.skewed import skewed_graph
@@ -120,7 +120,7 @@ def main() -> None:
         auth0 = bi.select(F.col("supp").alias("node")).distinct().select(
             "node", F.lit(1.0).alias("score")
         ).localCheckpoint()
-        bc_auth, _bc_hub = _hits_regimes(bi)
+        bc_auth, _bc_hub = _regimes(bi, "supp", "cust")
 
         for regime, confs in (
             ("bcast", {}),
